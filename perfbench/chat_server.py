@@ -11,11 +11,13 @@ stdin (the generator's window, in ``time.perf_counter`` seconds, which is
 CLOCK_MONOTONIC and so comparable across processes on one host).
 
 On stop it times and checks recovery — per stream, ``persist_state``,
-reopens from the snapshot, then a reopen with the snapshot removed (full
-replay), each of which must reproduce the live ``messages`` — and prints
+reopens from the snapshot and, in a traced run, a reopen with the
+snapshot removed (full replay), each of which must reproduce the live
+``messages`` — and prints
 one JSON line: every stream's live ``messages`` as ``[idx, sender,
 content]``, the recovery checks and timings and, in a traced run, the
-server-side layer metrics.
+server-side layer metrics.  A traced run then also folds a few seeded
+batches through each fold tier (``_fold_tiers``) on the warm session.
 """
 
 from __future__ import annotations
@@ -59,12 +61,10 @@ def main() -> int:
     for did in dids.values():
         catalog.create_stream(did, cid)
 
-    # preload ``large`` past the append-mirror cap, in large batches
+    # preload ``large`` past the append-mirror cap, in one batch
     t = time.perf_counter()
-    large = catalog.open(dids["large"])
-    n, b = cfg["preload"], cfg["preload_batch"]
-    for lo in range(0, n, b):
-        large.add_events([M.chat_event(*M.preload_row(i)) for i in range(lo, min(lo + b, n))])
+    catalog.open(dids["large"]).add_events(
+        [M.chat_event(*M.preload_row(i)) for i in range(cfg["preload"])])
     preload_s = time.perf_counter() - t
 
     tokens = {tok: Connection(user=user) for tok, user in cfg["tokens"].items()}
@@ -90,6 +90,8 @@ def main() -> int:
         result["handles"] = _handle_spans(tracer, t0)
         result["dropped"] = tracer.dropped
     result["recovery"] = _recovery(spark, tracer, catalog, dids, result)
+    if tracer.enabled:
+        result["layers"].update(_fold_tiers(spark, tracer, cfg, result))
     tracer.unpatch()
     print(json.dumps(result), file=real_stdout, flush=True)
     stop_spark()
@@ -103,17 +105,20 @@ def _messages(stream) -> list:
     return [[r["idx"], r["sender"], r["content"]] for r in rows]
 
 
-REOPENS = 3  # reopen is cheap: repeat it and report the median
-# the large stream's log holds the preload and every window commit; the
-# small one's full replay would add ~4 s of cold-path time to every run
+# reopen is cheap (~0.08 s a stream): repeat it and report the median; a
+# median of three still spread 15-40 % across runs
+REOPENS = 9
+# the large stream's log holds the preload and every commit; it is
+# replayed in traced runs only (3-8 s, a per-layer figure); the small
+# one's full replay would add ~4 s of cold-path time to every run
 REPLAYED = ("large",)
 
 
 def _recovery(spark, tracer, catalog, dids: dict, result: dict) -> dict:
     """Persist every stream and reopen each from its snapshot ``REOPENS``
-    times; remove the snapshot of each stream in ``REPLAYED`` and replay
-    its whole log.  Every reopened and replayed stream must reproduce the
-    live ``messages``."""
+    times; in a traced run, remove the snapshot of each stream in
+    ``REPLAYED`` and replay its whole log.  Every reopened and replayed
+    stream must reproduce the live ``messages``."""
     from perfbench.common import median
 
     timing = {}
@@ -140,7 +145,7 @@ def _recovery(spark, tracer, catalog, dids: dict, result: dict) -> dict:
         timing[f"log_files.{name}"] = sum(
             1 for f in os.listdir(s.events_dir) if f.endswith(".parquet"))
         timing[f"reopen_s.{name}"] = median(reopen)
-        if name not in REPLAYED:
+        if name not in REPLAYED or not tracer.enabled:
             continue
         shutil.rmtree(snap, ignore_errors=True)
         t = time.perf_counter()
@@ -154,6 +159,109 @@ def _recovery(spark, tracer, catalog, dids: dict, result: dict) -> dict:
             tracer.collect_jobs(tracer.subtree(sp))
             timing[f"replay_jobs.{name}"] = tracer.inclusive_jobs(sp)[0]
     return timing
+
+
+# -- fold tiers (traced runs only) ------------------------------------------
+
+# module name -> events per batch.  ``chat`` folds set-wise, ``counter`` in
+# pooled per-key rounds (one round per occurrence of the batch's most
+# frequent key, each a few Spark statements), ``dedup`` through the
+# compiled ``NOT EXISTS`` statement.  The counter batch is small because
+# its cost grows with the rounds: 0.5-1 s a round on a 4-core host.
+FOLD_EVENTS = {"chat": 200, "counter": 20, "dedup": 50}
+FOLD_BATCHES = 4  # the first is warm-up; the figures are medians of the rest
+COUNTER_KEYS, DEDUP_KEYS = 20, 100
+ZIPF_S = 0.5  # key k has weight 1 / (k + 1) ** ZIPF_S
+
+
+def _fold_batches(rng, name: str, n: int) -> list:
+    """``FOLD_BATCHES`` seeded batches of ``n`` events for module ``name``;
+    counter and dedup keys are Zipf-skewed, so some repeat in a batch."""
+    from perfbench import modules as M
+
+    def zipf(keys: int) -> list[str]:
+        w = [1.0 / (k + 1) ** ZIPF_S for k in range(keys)]
+        return [f"k{k}" for k in rng.choices(range(keys), weights=w, k=n)]
+
+    out = []
+    for b in range(FOLD_BATCHES):
+        if name == "chat":
+            out.append([M.chat_event(f"did:plc:u{rng.randrange(8)}", f"fold-{b}-{i}",
+                                     1_700_000_000 + b * n + i) for i in range(n)])
+        elif name == "counter":
+            out.append([M.counter_event("did:plc:u", k, rng.randrange(1, 10))
+                        for k in zipf(COUNTER_KEYS)])
+        else:
+            out.append([M.dedup_event("did:plc:u", k) for k in zipf(DEDUP_KEYS)])
+    return out
+
+
+def _fold_expected(name: str, batches: list) -> list:
+    """The module's query result computed by a plain-Python fold."""
+    from leaf_spark import drisl
+
+    events = [(i + 1, e) for i, e in enumerate(ev for b in batches for ev in b)]
+    payload = {i: drisl.decode(e.payload) for i, e in events}
+    if name == "chat":
+        return [[i, e.user, payload[i]["content"]] for i, e in events]
+    if name == "counter":
+        acc: dict[str, int] = {}
+        for i, _ in events:
+            acc[payload[i]["name"]] = acc.get(payload[i]["name"], 0) + payload[i]["delta"]
+        return sorted([k, v] for k, v in acc.items())
+    first: dict[str, int] = {}
+    for i, _ in events:
+        first.setdefault(payload[i]["key"], i)
+    return sorted(([k, i] for k, i in first.items()), key=lambda r: r[1])
+
+
+def _fold_tiers(spark, tracer, cfg: dict, result: dict) -> dict:
+    """Fold ``FOLD_BATCHES`` batches through a fresh stream of each fold
+    module and report, per module, the median over the batches after the
+    first of the ``add_events`` time and of the ``DmlExecutor.execute``
+    statements, Spark jobs, DataFrame checkpoints and py4j commands it
+    took.  Each stream's state must equal a plain-Python fold."""
+    import random
+
+    from perfbench import modules as M
+    from perfbench.common import median
+    from leaf_spark.stream import Stream
+    from leaf_spark.types import LeafQuery
+
+    # module, its query and the query's columns the check compares
+    mods = {"chat": (M.CHAT, "messages", ("idx", "sender", "content")),
+            "counter": (M.COUNTER, "counters", ("name", "value")),
+            "dedup": (M.DEDUP, "seen", ("key", "idx"))}
+    rng = random.Random(cfg["seed"])
+    m = {}
+    for name, (mod, query, cols) in mods.items():
+        n = max(5, int(FOLD_EVENTS[name] * cfg["size"]))
+        batches = _fold_batches(rng, name, n)
+        s = Stream(spark, os.path.join(cfg["work"], "fold"), f"did:plc:fold-{name}")
+        s.provide_module(mod)
+        rows = []
+        for batch in batches:
+            with tracer.span(f"fold.{name}", job_group=True) as sp:
+                s.add_events(batch)
+            tracer.collect_jobs(tracer.subtree(sp))
+            sub = {x.sid: x for x in tracer.subtree(sp)}
+            # statements the fold issued; an execution nested in another
+            # is not counted
+            stmts = [x for x in sub.values() if x.name == "dml.execute"
+                     and sub.get(x.parent, sp).name != "dml.execute"]
+            rows.append({"ms": sp.ms, "stmts": len(stmts), "jobs": tracer.inclusive_jobs(sp)[0],
+                         "ckpts": sp.ckpt, "py4j": sp.py4j})
+        for key, metric, unit in (("ms", "stream.batch_ms", "ms"),
+                                  ("stmts", "dml.statements_per_batch", "count"),
+                                  ("jobs", "spark.jobs_per_batch", "count"),
+                                  ("ckpts", "spark.checkpoints_per_batch", "count"),
+                                  ("py4j", "py4j.calls_per_batch", "count")):
+            m[f"{metric}.{name}"] = (median(r[key] for r in rows[1:]), unit)
+        got = [[r[c] for c in cols] for r in s.query(None, LeafQuery(query, {}, None, 10**7))]
+        want = _fold_expected(name, batches)
+        result["checks"].append([f"fold:{name}==python fold", got == want,
+                                 f"{len(got)} vs {len(want)} rows"])
+    return m
 
 
 def _open(spark, root: str, did: str):
@@ -184,7 +292,7 @@ def _handle_attrs(args, kwargs):
 
 
 def _wrap_layers(tracer) -> None:
-    from leaf_spark.dml import TableStore
+    from leaf_spark.dml import DmlExecutor, TableStore
     from leaf_spark.localexec import LocalEval
     from leaf_spark.server import LeafServer
     from leaf_spark.stream import Stream
@@ -196,6 +304,7 @@ def _wrap_layers(tracer) -> None:
     tracer.wrap(Stream, "query_df", "stream.query_df")
     tracer.wrap(Stream, "persist_state", "stream.persist")
     tracer.wrap(TableStore, "checkpoint_all", "dml.checkpoint")
+    tracer.wrap(DmlExecutor, "execute", "dml.execute")
     tracer.wrap(LocalEval, "authorize", "localexec.authorize")
     tracer.wrap(LocalEval, "authorize_setwise", "localexec.authorize")
     tracer.wrap(LocalEval, "run_readonly", "localexec.readonly")

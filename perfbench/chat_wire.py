@@ -16,14 +16,13 @@ generator is one thread that ``select``s over four connections:
 
 Open loop: every call has a scheduled send time and is timed from it.
 Set-up is the server's start (session, module upload, stream creation,
-preload), the connections and a closed-loop warm-up of fixed count.
+preload), the connections, a closed-loop warm-up of fixed count and
+``WARMUP_FRAMES`` untimed frames of the window's schedule.
 """
 
 from __future__ import annotations
 
-import base64
 import json
-import os
 import random
 import select
 import socket
@@ -35,23 +34,35 @@ import time
 from . import modules as M
 from .common import Outcome, latency_stats, median, pct, repo_root
 
-# A frame of FRAME_S seconds holds one commit and two page reads per
-# stream, at these offsets.  On a 4-core host a small-stream commit plus
-# its subscription re-query takes ~0.65 s, a mirror-served page ~0.01 s, a
-# Spark-path page ~0.15 s and a large-stream commit plus re-query ~0.85 s:
-# they follow each other without queueing on a stream lock or on the
-# reader's connection, and the engine is idle for over a third of the
-# frame, which absorbs a slow call without delaying the next frame.
+# A frame of FRAME_S seconds holds one commit per stream, four page reads
+# on the small stream and two on the large one, at these offsets.  On a
+# 4-core host a commit plus its subscription push takes ~0.35-0.5 s, a
+# mirror-served page ~5 ms and a Spark-path page ~0.12 s: they follow each
+# other without queueing on a stream lock or on the reader's connection,
+# and the engine is idle for over half the frame, which absorbs a slow
+# call without delaying the next frame.  The small-stream page is cheap
+# but its latency is mostly thread wake-ups, which scatter, so it is
+# sampled four times a frame.
 FRAME_S = 3.0
 OFFSETS = {  # (commit, page reads)
-    "small": (0.0, (0.75, 2.2)),
-    "large": (1.2, (0.9, 2.3)),
+    "small": (0.0, (0.75, 2.3, 2.5, 2.7)),
+    "large": (1.2, (0.9, 2.0)),
 }
 BATCH = 10
 MALFORMED_SHARE = 0.1
 PRELOAD = 17_000  # > the engine's 16,384-row append-mirror cap
-PRELOAD_BATCH = PRELOAD  # one batch
-WARMUP_COMMITS = 8  # per writer, closed loop
+# Warm-up, by operation count: WARMUP_COMMITS closed-loop commits per
+# writer (the cold path, the malformed batches and the other reader calls),
+# then WARMUP_FRAMES untimed frames of the window's own schedule.  With
+# only the closed-loop part (eight or sixteen commits), the window's first
+# frame ran 10-45 % above its later ones; two lead frames after 12 or 18
+# commits still left the first half of the window ~10 % above the second
+# in most runs.  The small stream must stay under the engine's 256-event
+# snapshot cadence through the window, or one commit in the window pays
+# for a full persist: 12 warm-up commits (11 accepted), four lead frames
+# and four window frames add 190 events.
+WARMUP_COMMITS = 12
+WARMUP_FRAMES = 4
 WARMUP_READS = 4  # read slots per stream
 DRAIN_TIMEOUT_S = 60.0
 PAGE = 50  # rows per messages page
@@ -82,50 +93,32 @@ CONNECT, EVENT, ACK = 0, 2, 3
 
 
 class WireConn:
-    """One websocket connection: handshake, masked binary frames out,
-    incremental frame parsing in (so ``select`` sees every byte)."""
+    """One websocket connection: the engine's handshake and masked frame
+    writer, plus an incremental frame parser for reads, so ``select``
+    sees every byte and a partial frame never blocks the generator."""
 
     def __init__(self, name: str, port: int, token: str | None):
         from leaf_spark import msgpack_codec
+        from leaf_spark import websocket as ws
 
         self.codec = msgpack_codec
         self.name = name
         self.sock = socket.create_connection(("127.0.0.1", port), timeout=30)
-        key = base64.b64encode(os.urandom(16)).decode()
-        self.sock.sendall((
-            "GET /socket.io/?EIO=4&transport=websocket HTTP/1.1\r\n"
-            f"Host: 127.0.0.1:{port}\r\nUpgrade: websocket\r\nConnection: Upgrade\r\n"
-            f"Sec-WebSocket-Key: {key}\r\nSec-WebSocket-Version: 13\r\n\r\n"
-        ).encode())
-        buf = b""
-        while b"\r\n\r\n" not in buf:
-            chunk = self.sock.recv(4096)
-            if not chunk:
-                raise ConnectionError("server closed during handshake")
-            buf += chunk
-        head, _, rest = buf.partition(b"\r\n\r\n")
-        if b" 101 " not in head.split(b"\r\n")[0]:
-            raise ConnectionError(head[:80])
-        self.buf = bytearray(rest)
+        self.fs = ws.client_handshake(self.sock, f"127.0.0.1:{port}",
+                                      "/socket.io/?EIO=4&transport=websocket")
+        # bytes the handshake read past the 101 response (the engine.io
+        # open packet may ride right behind it)
+        self.buf = bytearray(self.fs._buf)
         self.next_id = 0
         self.pending: dict[int, object] = {}  # packet id -> call
         self._send_packet({"type": CONNECT, "nsp": "/", "data": {"token": token} if token else {}})
         self.connected = False
 
-    def _send_frame(self, opcode: int, payload: bytes) -> None:
-        mask = os.urandom(4)
-        n = len(payload)
-        if n < 126:
-            head = struct.pack(">BB", 0x80 | opcode, 0x80 | n)
-        elif n <= 0xFFFF:
-            head = struct.pack(">BBH", 0x80 | opcode, 0x80 | 126, n)
-        else:
-            head = struct.pack(">BBQ", 0x80 | opcode, 0x80 | 127, n)
-        body = bytes(b ^ mask[i % 4] for i, b in enumerate(payload))
-        self.sock.sendall(head + mask + body)
+    def send_frame(self, opcode: int, payload: bytes) -> None:
+        self.fs.write_frame(opcode, payload, mask=True)
 
     def _send_packet(self, pkt: dict) -> None:
-        self._send_frame(0x2, self.codec.pack(pkt))
+        self.send_frame(0x2, self.codec.pack(pkt))
 
     def call(self, call, endpoint: str, args: dict) -> None:
         from leaf_spark import drisl
@@ -199,8 +192,9 @@ def _batch(rng: random.Random, stream: str, k: int, malformed: bool, at: int):
 
 
 def build_schedule(rng: random.Random, seconds: float, size: float) -> dict:
-    """Warm-up and timed-window calls as (conn, kind, stream, due offset,
-    payloads, contents, expect ok); fixed counts for a given ``seconds``.
+    """Closed-loop warm-up, lead-frame and timed-window calls as (conn,
+    kind, stream, due offset from the window's start, payloads, contents,
+    expect ok); fixed counts for a given ``seconds``.
     Offsets keep each read between two commits of its stream and keep the
     reader's small- and large-stream calls from queueing behind each
     other on its connection."""
@@ -234,12 +228,18 @@ def build_schedule(rng: random.Random, seconds: float, size: float) -> dict:
     for s in STREAMS:
         writes(s, max(2, int(WARMUP_COMMITS * size)), 0.0, 0.0, "warm")
         reads(s, max(2, int(WARMUP_READS * size)), (0.0,), 0.0, "warm")
+    # the lead frames come first, at negative offsets from the window's start
     frame = FRAME_S * stretch
     frames = max(2, int(seconds / frame))
+    lead_s = WARMUP_FRAMES * frame
     for s, (w_off, r_offs) in OFFSETS.items():
-        writes(s, frames, w_off * stretch, frame, "window")
-        reads(s, frames, tuple(r * stretch for r in r_offs), frame, "window")
-    plan["window"].sort(key=lambda c: c[3])
+        writes(s, WARMUP_FRAMES + frames, w_off * stretch - lead_s, frame, "window")
+        reads(s, WARMUP_FRAMES + frames, tuple(r * stretch - lead_s for r in r_offs), frame,
+              "window")
+    calls = sorted(plan["window"], key=lambda c: c[3])
+    plan["lead"] = [c for c in calls if c[3] < 0]
+    plan["window"] = [c for c in calls if c[3] >= 0]
+    plan["lead_s"] = lead_s
     return plan
 
 
@@ -288,7 +288,7 @@ class Driver:
             for op, payload in conn.read():
                 if op == 0x1:  # engine.io text: ping -> pong
                     if payload[:1] == b"2":
-                        conn._send_frame(0x1, b"3" + payload[1:])
+                        conn.send_frame(0x1, b"3" + payload[1:])
                     continue
                 if op != 0x2:
                     continue
@@ -372,8 +372,7 @@ def run(args, clock, tracer, out: Outcome, work, spark_factory) -> None:
 
     cfg = {
         "work": work.path, "trace": int(bool(args.trace)), "streams": STREAMS,
-        "tokens": TOKENS, "preload": preload,
-        "preload_batch": max(50, int(PRELOAD_BATCH * size)),
+        "tokens": TOKENS, "preload": preload, "seed": args.seed, "size": size,
     }
     proc = subprocess.Popen(
         [sys.executable, "-m", "perfbench.chat_server", json.dumps(cfg)],
@@ -435,17 +434,19 @@ def _drive(args, clock, out, plan, port, conns, proc, server_setup, preload):
     # let the warm-up's last subscription pushes land before the window
     if not drv.drain(warm, time.perf_counter() + DRAIN_TIMEOUT_S, dict(drv.latest)):
         raise TimeoutError("warm-up pushes did not arrive")
-    warmup_s = time.perf_counter() - t_w
+    lead = [mk(s) for s in plan["lead"]]
     calls = [mk(s) for s in plan["window"]]
-    setup_s = clock.setup_s()
-    t0 = time.perf_counter()
-    drv.run_open(calls, t0)
+    # the window opens once the lead frames have run
+    setup_s = clock.setup_s() + plan["lead_s"]
+    t0 = time.perf_counter() + plan["lead_s"]
+    warmup_s = t0 - t_w
+    drv.run_open(lead + calls, t0)
     window_end = t0 + args.seconds
     backlog = sum(1 for c in calls if t0 + c.due <= window_end and (c.sent or 1e18) > window_end)
     deadline = time.perf_counter() + DRAIN_TIMEOUT_S
-    drained = drv.drain(calls, deadline, {})
+    drained = drv.drain(lead + calls, deadline, {})
     # then wait for the pushes that carry the last accepted commit
-    drained = drained and drv.drain(calls, deadline, dict(drv.latest))
+    drained = drained and drv.drain(lead + calls, deadline, dict(drv.latest))
     t1 = time.perf_counter()
     out.check("drained", drained, "acks/pushes outstanding after drain timeout")
 
@@ -456,7 +457,7 @@ def _drive(args, clock, out, plan, port, conns, proc, server_setup, preload):
         raise RuntimeError("chat server exited without a result")
     srv = json.loads(line)
 
-    _check(out, args, warm + calls, drv, srv, preload)
+    _check(out, args, warm + lead + calls, drv, srv, preload)
     _metrics(out, args, calls, drv, t0, setup_s, warmup_s, backlog, srv, server_setup)
 
 
@@ -534,16 +535,17 @@ def _metrics(out, args, calls, drv, t0, setup_s, warmup_s, backlog, srv, server_
         "commit_ms_both_streams": latency_stats(commit_ms),
     }
     for s in STREAMS:
-        # nearest-rank p50: an observed value, not the mean of two modes
+        # one stream, one mode: the median (of an even count, the mean of
+        # the two middle samples) is steadier than a nearest-rank p50
         cm = [(c.acked - (t0 + c.due)) * 1000.0 for c in commits if c.stream == s]
-        out.metric(f"commit_{s}_p50_ms", pct(cm, 50), "ms")
+        out.metric(f"commit_{s}_p50_ms", median(cm), "ms")
         details[f"commit_{s}_ms"] = latency_stats(cm)
         for kind in ("messages",) + OTHER_READS:
             q = [(c.acked - (t0 + c.due)) * 1000.0 for c in calls
                  if c.stream == s and c.kind == kind and c.acked]
             details[f"{kind}_{s}_ms"] = latency_stats(q)
             if kind == "messages":
-                out.metric(f"query_{s}_p50_ms", pct(q, 50), "ms")
+                out.metric(f"query_{s}_p50_ms", median(q), "ms")
         push = []
         for c in commits:
             if c.stream != s:
@@ -552,7 +554,7 @@ def _metrics(out, args, calls, drv, t0, setup_s, warmup_s, backlog, srv, server_
             got = [t for t, rows in drv.pushes[s] if rows and any(r[0] == last for r in rows)]
             if got:
                 push.append((got[0] - (t0 + c.due)) * 1000.0)
-        out.metric(f"push_{s}_p50_ms", pct(push, 50), "ms")
+        out.metric(f"push_{s}_p50_ms", median(push), "ms")
         details[f"push_{s}_ms"] = latency_stats(push)
     rec = srv["recovery"]
     out.metric("reopen_s", sum(rec[f"reopen_s.{s}"] for s in STREAMS), "s")

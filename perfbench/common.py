@@ -68,7 +68,7 @@ def halves(xs) -> dict:
 
 def latency_stats(xs, pcts=(50, 90, 99)) -> dict:
     xs = list(xs)
-    out = {"n": len(xs)}
+    out = {"n": len(xs), "series": [round(x, 3) for x in xs]}
     for p in pcts:
         out[f"p{p}"] = pct(xs, p)
         # observations strictly above the percentile: a percentile is

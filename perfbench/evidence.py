@@ -1,15 +1,19 @@
-"""Steadiness evidence: repeated plain runs per workload and one traced run.
+"""Steadiness evidence: two sets of repeated plain runs per workload and
+one traced run.
 
     python3 perfbench/evidence.py --out perfbench/evidence/NAME.json
-        [--workloads catalog,chat_wire] [--seeds 1-10] [--traced-seed 101]
+        [--workloads catalog,chat_wire]
 
 Run from the checkout root.  For every workload it runs ``run.py`` once per
-seed (plain), then once traced, and writes one JSON file: per end-to-end
-metric the ten values, their median and quartiles
+seed of each set in ``SETS`` (plain), then once traced with
+``TRACED_SEED``, and writes one JSON file: per set and end-to-end metric
+the ten values, their median and quartiles
 (``statistics.quantiles(values, n=4)``) and the quartile spread as a share
-of the median next to the metric's bound; the traced run's per-layer
-metrics; and the tracing overhead on each end-to-end metric (the traced
-value against the plain median).
+of the median next to the metric's bound; per set and timed series the
+first-half to second-half ratio across runs; per metric the second set's
+median against the first's; the traced run's per-layer metrics; and the
+tracing overhead on each end-to-end metric (the traced value against the
+plain median of the first set).
 """
 
 from __future__ import annotations
@@ -23,13 +27,10 @@ import subprocess
 import sys
 import time
 
-
-def _seeds(spec: str) -> list[int]:
-    out = []
-    for part in spec.split(","):
-        lo, _, hi = part.partition("-")
-        out.extend(range(int(lo), int(hi or lo) + 1))
-    return out
+# two sets of ten seeded runs: the spread within a set and the move of
+# each median between sets are what the benchmark's bounds are checked on
+SETS = (range(1, 11), range(11, 21))
+TRACED_SEED = 101
 
 
 def run_once(workload: str, seed: int, seconds: int, trace: int) -> dict:
@@ -58,12 +59,24 @@ def summarize(values: list[float], bound: float | None) -> dict:
     }
 
 
+def halves_summary(runs: list[dict]) -> dict:
+    """Per timed series, the ratio of its first-half to its second-half
+    median in each run: a ratio that sits above 1 across runs means the
+    warm-up was too short, one that scatters around 1 is sampling noise."""
+    ratios: dict[str, list[float]] = {}
+    for r in runs:
+        for k, v in (r.get("details") or {}).items():
+            if isinstance(v, dict) and v.get("second_half_p50"):
+                ratios.setdefault(k, []).append(v["first_half_p50"] / v["second_half_p50"])
+    return {k: {"median_ratio": statistics.median(x), "runs": len(x),
+                "first_half_slower": sum(1 for y in x if y > 1)}
+            for k, x in sorted(ratios.items())}
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--out", required=True)
     ap.add_argument("--workloads", default=None)
-    ap.add_argument("--seeds", default="1-10")
-    ap.add_argument("--traced-seed", type=int, default=101)
     args = ap.parse_args()
     with open("BENCHMARK.json") as f:
         bench = json.load(f)
@@ -76,18 +89,29 @@ def main() -> int:
         "run_seconds": seconds, "workloads": {},
     }
     for w in workloads:
-        runs = []
-        for seed in _seeds(args.seeds):
-            r = run_once(w, seed, seconds, 0)
-            runs.append(r)
-            print(w, seed, r["rc"], round(r["wall_s"], 1),
-                  {k: round(v["value"], 3) for k, v in r.get("result", {}).get("metrics", {}).items()},
-                  file=sys.stderr, flush=True)
-        ok = [r for r in runs if r["rc"] == 0]
-        names = sorted({k for r in ok for k in r["result"]["metrics"]})
-        metrics = {n: summarize([r["result"]["metrics"][n]["value"] for r in ok], e2e.get(n, {}).get("bound"))
-                   for n in names}
-        traced = run_once(w, args.traced_seed, seconds, 1)
+        sets = []
+        for seeds in SETS:
+            runs = []
+            for seed in seeds:
+                r = run_once(w, seed, seconds, 0)
+                runs.append(r)
+                print(w, seed, r["rc"], round(r["wall_s"], 1),
+                      {k: round(v["value"], 3)
+                       for k, v in r.get("result", {}).get("metrics", {}).items()},
+                      file=sys.stderr, flush=True)
+            ok = [r for r in runs if r["rc"] == 0]
+            names = sorted({k for r in ok for k in r["result"]["metrics"]})
+            metrics = {n: summarize([r["result"]["metrics"][n]["value"] for r in ok],
+                                    e2e.get(n, {}).get("bound"))
+                       for n in names}
+            sets.append((runs, metrics))
+        metrics = sets[0][1]
+        drift = {n: {"first_median": m["median"],
+                     "second_median": sets[1][1][n]["median"],
+                     "share": (sets[1][1][n]["median"] - m["median"]) / m["median"],
+                     "bound": m["bound"]}
+                 for n, m in metrics.items() if n in sets[1][1] and m["median"]}
+        traced = run_once(w, TRACED_SEED, seconds, 1)
         print(w, "traced", traced["rc"], round(traced["wall_s"], 1), file=sys.stderr, flush=True)
         overhead = {}
         for n, m in metrics.items():
@@ -96,20 +120,25 @@ def main() -> int:
                 overhead[n] = {"traced": tv, "plain_median": m["median"],
                                "share": (tv - m["median"]) / m["median"]}
         report["workloads"][w] = {
-            "runs": [{"seed": r["seed"], "rc": r["rc"], "wall_s": r["wall_s"],
-                      "correct": r.get("result", {}).get("correct"),
-                      "attempted": r.get("result", {}).get("attempted"),
-                      "failed": r.get("result", {}).get("failed"),
-                      "details": r.get("details")} for r in runs],
-            "end_to_end": metrics,
-            "traced": {"seed": args.traced_seed, "rc": traced["rc"], "wall_s": traced["wall_s"],
+            "sets": [{
+                "runs": [{"seed": r["seed"], "rc": r["rc"], "wall_s": r["wall_s"],
+                          "correct": r.get("result", {}).get("correct"),
+                          "attempted": r.get("result", {}).get("attempted"),
+                          "failed": r.get("result", {}).get("failed"),
+                          "details": r.get("details")} for r in runs],
+                "end_to_end": m,
+                "halves": halves_summary(runs),
+            } for runs, m in sets],
+            "median_drift": drift,
+            "traced": {"seed": TRACED_SEED, "rc": traced["rc"], "wall_s": traced["wall_s"],
                        "per_layer": {k: v["value"] for k, v in traced.get("result", {}).get("metrics", {}).items()},
                        "dropped": traced.get("details", {}).get("dropped_metrics", {})},
             "tracing_overhead": overhead,
         }
-    os.makedirs(os.path.dirname(args.out) or ".", exist_ok=True)
-    with open(args.out, "w") as f:
-        json.dump(report, f, indent=1)
+        # written after every workload, so a later failure keeps the rest
+        os.makedirs(os.path.dirname(args.out) or ".", exist_ok=True)
+        with open(args.out, "w") as f:
+            json.dump(report, f, indent=1)
     return 0
 
 

@@ -1,11 +1,13 @@
-"""The benchmark's own copy of the chat module it drives, and its event
+"""The benchmark's own copies of the modules it drives, and their event
 payloads.
 
 ``CHAT`` folds set-wise (one ``INSERT … SELECT FROM event`` per batch),
 keeps read markers in a state table, and has an authorizer that rejects
-any batch holding an event without ``content``.  Kept here, not imported
-from the test fixtures, so that edits to the tests cannot change a
-workload.
+any batch holding an event without ``content``.  ``COUNTER`` folds in
+pooled per-key rounds (an insert and an event-keyed accumulating update
+share the target).  ``DEDUP`` is the ``NOT EXISTS`` idiom, compiled to one
+set-wise statement.  Kept here, not imported from the test fixtures, so
+that edits to the tests cannot change a workload.
 """
 
 from __future__ import annotations
@@ -60,6 +62,31 @@ CHAT = BasicModuleDef(
     ),
 )
 
+COUNTER = BasicModuleDef(
+    init_sql=(
+        "create table if not exists counters (name text primary key, value integer not null)"
+    ),
+    materializer=(
+        "insert into counters (name, value) "
+        "select drisl_extract(payload, '.name'), 0 from event "
+        "where true on conflict(name) do nothing; "
+        "update counters set value = value + "
+        "(select drisl_extract_int(payload, '.delta') from event) "
+        "where name = (select drisl_extract(payload, '.name') from event);"
+    ),
+    queries=(QueryDef("counters", "select name, value from counters order by name"),),
+)
+
+DEDUP = BasicModuleDef(
+    init_sql="create table if not exists seen (key text not null, idx integer not null)",
+    materializer=(
+        "insert into seen (key, idx) "
+        "select drisl_extract(payload, '.key'), idx from event "
+        "where not exists (select 1 from seen where key = drisl_extract(payload, '.key'));"
+    ),
+    queries=(QueryDef("seen", "select key, idx from seen order by idx"),),
+)
+
 
 # -- events -------------------------------------------------------------------
 
@@ -84,3 +111,11 @@ def preload_row(i: int) -> tuple[str, str, int]:
 
 def marker_payload(last_read: int) -> bytes:
     return drisl.encode({"lastRead": last_read})
+
+
+def counter_event(user: str, name: str, delta: int) -> IncomingEvent:
+    return IncomingEvent(user, drisl.encode({"name": name, "delta": delta}))
+
+
+def dedup_event(user: str, key: str) -> IncomingEvent:
+    return IncomingEvent(user, drisl.encode({"key": key}))
