@@ -1,16 +1,19 @@
-"""``catalog`` workload: the operator catalog, closed loop, one client.
+"""The catalog part of a run: the operator catalog, closed loop, one client.
 
-Each pass builds every query of ``QUERIES`` (``QueryCase.spark_fn``) and
-forces all of its columns through Spark's ``noop`` sink; ``count()`` would
-let the optimizer prune columns.  Query order is shuffled per pass by the
-seed.  The tables come from ``datagen`` with the run's seed.
+Each pass builds every query of the workload's set in ``QUERIES``
+(``QueryCase.spark_fn``) and forces all of its columns through Spark's
+``noop`` sink; ``count()`` would let the optimizer prune columns.  Query
+order is shuffled per pass by the seed.  The tables come from ``datagen``
+with the run's seed.
 
-Set-up (``setup_s``) is session start, table registration and
-``WARMUP_PASSES`` passes, the first of which collects every query's rows;
-those rows are checked against the query's DuckDB oracle after the window
-(row count, column names and an order-insensitive value hash, the method
-of ``tools/check.py``).  The timed window is a fixed number of passes
-derived from ``--seconds``.
+The passes run in the engine process (``run_passes``), on the session the
+stream part then serves from.  ``WARMUP_PASSES`` passes come first (part of
+``setup_s``), the first of which collects every query's rows; the engine
+returns each query's answer (row count, column names and an
+order-insensitive value hash, the method of ``tools/check.py``), which the
+generator checks against the query's DuckDB oracle (``check``).  The timed
+window is a fixed number of passes derived from the catalog's share of
+``--seconds``.
 """
 
 from __future__ import annotations
@@ -24,28 +27,48 @@ import time
 from . import datagen
 from .common import Outcome, geomean, halves, median
 
-# The benchmark's own copy of the measured query set: a subset of
-# bench.py's headline and heavy lists (one per operator family, plus the
-# iterative heavies with the most eager jobs), kept here so edits to
-# bench.py cannot change the workload.
-QUERIES = (
-    "q01_pricing_summary",
-    "q03_revenue_by_nation",
-    "q11_window_topk",
-    "q15_correlated_subquery",
-    "q34_events_sessionize",
-    "q49_minhash_lsh",
-    "q90_containment_dedup",
-)
-E2E = ("setup_s", "pass_s", "query_geomean_ms")
+# The benchmark's own copy of the measured query sets, kept here so edits
+# to bench.py cannot change a workload.  ``small``: one query per operator
+# family from bench.py's headline list, sub-second each, where the fixed
+# per-job cost dominates.  ``large``: the containment-dedup heavy, whose
+# eager checkpoints and iterative rounds make compute and shuffle dominate.
+# The other iterative heavy, q49_minhash_lsh, took as long a pass but
+# added ~9 s of warm-up to every run: the 48 runs of two sets of
+# steadiness evidence per checkout would not fit their time budget.
+QUERIES = {
+    "small": (
+        "q01_pricing_summary",
+        "q03_revenue_by_nation",
+        "q11_window_topk",
+        "q15_correlated_subquery",
+        "q34_events_sessionize",
+    ),
+    "large": ("q90_containment_dedup",),
+}
 SCALE = 0.01  # lineitem 60,000 rows
 # warm-up passes: the first collects the rows for the output check, the
-# rest write to the noop sink.  After the collect pass, pass times on a
-# 4-core host ran 6.7, 5.2, 4.0, 3.7, 3.5, 3.4, 3.4 s and then drifted
-# down by about 1 % a pass (the JVM compiling the planner's code paths);
-# warming until that drift ends would double the run.
-WARMUP_PASSES = 4
-NOMINAL_PASS_S = 3.75  # sizes the window: passes = round(seconds / this)
+# rest write to the noop sink.  On a fresh session, pass times on a 4-core
+# host ran 4.5, 1.9, 1.6, 1.4, 1.4 s (``small``) and 2.9, 1.7, 1.35, 1.1,
+# 1.1 s (``large``'s query on a warm JVM); the first pass also pays the
+# session's cold start, ~7 s.  With four (``small``) and three (``large``)
+# warm-up passes, the window's first-half pass time still ran 9-15 %
+# above its second half in nearly every run.
+WARMUP_PASSES = {"small": 6, "large": 5}
+# sizes the window: passes = round(catalog seconds / this)
+NOMINAL_PASS_S = {"small": 1.45, "large": 1.25}
+
+
+def plan(workload: str, seconds: float, size: float) -> dict:
+    """The catalog part's fixed counts for a window of ``seconds``."""
+    names = list(QUERIES[workload])
+    if size < 1:
+        names = names[: max(1, int(len(names) * size + 0.5))]
+    return {
+        "queries": names,
+        "scale": SCALE * size,
+        "passes": max(2, round(seconds / NOMINAL_PASS_S[workload])),
+        "warmup_passes": WARMUP_PASSES[workload],
+    }
 
 
 # -- output checks (the tools/check.py method) -------------------------------
@@ -97,34 +120,34 @@ def oracle_answers(cases, names, data_dir: str) -> dict:
     return out
 
 
-# -- workload -----------------------------------------------------------------
 
 
-def run(args, clock, tracer, out: Outcome, work, spark_factory) -> None:
+def prepare(seed: int, cat: dict, data_dir: str, wrong: bool) -> dict:
+    """Benchmark-side preparation (not set-up): write the seeded tables and
+    compute the oracle's answers.  ``wrong`` makes one answer deliberately
+    wrong, so the output check must fail."""
     from leaf_spark.queries import all_cases
 
-    seed = args.seed
-    scale = SCALE * args.size
-    names = list(QUERIES[: max(2, int(len(QUERIES) * args.size))]) if args.size < 1 else list(QUERIES)
-    passes = max(2, round(args.seconds / NOMINAL_PASS_S))
+    counts = datagen.write_tables(seed, cat["scale"], data_dir)
+    expected = oracle_answers(all_cases(), cat["queries"], data_dir)
+    if wrong:
+        n0 = cat["queries"][0]
+        rc, cols, h = expected[n0]
+        expected[n0] = (rc + 1, cols, h)
+    return {"tables": counts, "expected": expected}
 
-    # benchmark-side preparation: data and oracle answers (not set-up)
-    with clock.exclude():
-        data_dir = work.sub("tables")
-        counts = datagen.write_tables(seed, scale, data_dir)
-        cases = all_cases()
-        expected = oracle_answers(cases, names, data_dir)
-        if args.wrong_expectation:
-            n0 = names[0]
-            rc, cols, h = expected[n0]
-            expected[n0] = (rc + 1, cols, h)
-    out.details["tables"] = counts
-    out.details["scale"] = scale
-    out.details["queries"] = names
 
-    spark = spark_factory()
+# -- engine side --------------------------------------------------------------
+
+
+def run_passes(spark, tracer, cat: dict, seed: int, data_dir: str) -> dict:
+    """Register the tables, run the warm-up passes and the timed window,
+    and return the window's timings and every query's answer."""
+    from leaf_spark.queries import all_cases
     from leaf_spark.session import load_tables
 
+    cases = all_cases()
+    names = cat["queries"]
     load_tables(spark, data_dir)
 
     def one_pass(order, sink: str, results: dict | None):
@@ -157,59 +180,36 @@ def run(args, clock, tracer, out: Outcome, work, spark_factory) -> None:
         rng.shuffle(order)
         return order
 
-    # set-up: warm-up passes of fixed count; the first collects the rows
     collected: dict = {}
     t_w = time.perf_counter()
     with tracer.span("session.warmup"):
-        for i in range(WARMUP_PASSES):
+        for i in range(cat["warmup_passes"]):
             one_pass(shuffled(), "collect" if i == 0 else "noop", collected)
-            out.attempted += len(names)
     warmup_s = time.perf_counter() - t_w
-    setup_s = clock.setup_s()
 
-    # timed window
+    t_win = time.perf_counter()
     walls, per_query, pass_spans = [], {n: [] for n in names}, []
-    for _ in range(passes):
+    for _ in range(cat["passes"]):
         wall, per_q, psp = one_pass(shuffled(), "noop", None)
         walls.append(wall)
         pass_spans.append(psp)
         for n, (c, e) in per_q.items():
-            per_query[n].append(c + e)
-        out.attempted += len(names)
+            per_query[n].append((c + e) * 1000.0)
+    window_s = time.perf_counter() - t_win
 
-    # output checks, after the window
+    answers = {}
     for n in names:
-        got = collected.get(n)
-        if got is None:
-            out.failed += 1
-            out.check(f"rows:{n}", False, "no rows collected")
-            continue
+        got = collected[n]
         dec = [k for k, v in (got[0].items() if got else []) if isinstance(v, decimal.Decimal)]
-        ok = not dec and answer(got) == expected[n]
-        if not ok:
-            out.failed += 1
-        out.check(
-            f"oracle:{n}", ok,
-            f"spark rows={len(got)} oracle rows={expected[n][0]}" + (f" decimal={dec}" if dec else ""),
-        )
-
-    pass_s = median(walls)
-    q_ms = {n: median(v) * 1000.0 for n, v in per_query.items()}
-    out.metric("setup_s", setup_s, "s")
-    out.metric("pass_s", pass_s, "s")
-    out.metric("query_geomean_ms", geomean(q_ms.values()), "ms")
-    out.details["passes"] = passes
-    out.details["warmup_passes"] = WARMUP_PASSES
-    out.details["pass_s_samples"] = walls
-    out.details["pass_s_halves"] = halves(walls)
-    out.details["query_median_ms"] = q_ms
-    out.details["warmup_s"] = warmup_s
-
+        answers[n] = [*answer(got), dec]
+    res = {"warmup_s": warmup_s, "window_s": window_s, "walls": walls,
+           "query_ms": per_query, "answers": answers}
     if tracer.enabled:
-        _layer_metrics(tracer, out, pass_spans, warmup_s, spark)
+        res["layers"] = _layer_metrics(tracer, pass_spans, spark)
+    return res
 
 
-def _layer_metrics(tracer, out: Outcome, pass_spans, warmup_s: float, spark) -> None:
+def _layer_metrics(tracer, pass_spans, spark) -> dict:
     slots = spark.sparkContext.defaultParallelism
     rows = []
     for psp in pass_spans:
@@ -233,15 +233,46 @@ def _layer_metrics(tracer, out: Outcome, pass_spans, warmup_s: float, spark) -> 
     def m(key):
         return median(r[key] for r in rows)
 
-    out.metric("queries.construct_ms", m("construct_ms"), "ms")
-    out.metric("queries.execute_ms", m("execute_ms"), "ms")
-    out.metric("queries.eager_jobs", m("eager_jobs"), "count")
-    out.metric("spark.jobs_per_pass", m("jobs"), "count")
-    out.metric("spark.stages_per_pass", m("stages"), "count")
-    out.metric("spark.tasks_per_pass", m("tasks"), "count")
-    out.metric("spark.checkpoints_per_pass", m("checkpoints"), "count")
-    out.metric("py4j.calls_per_pass", m("py4j"), "count")
-    out.metric("spark.shuffle_mb_per_pass", m("shuffle_mb"), "MB")
-    out.metric("spark.busy_share", m("busy_share"), "share")
-    out.metric("session.warmup_s", warmup_s, "s")
-    out.details["layers_per_pass"] = rows
+    return {
+        "queries.construct_ms": (m("construct_ms"), "ms"),
+        "queries.execute_ms": (m("execute_ms"), "ms"),
+        "queries.eager_jobs": (m("eager_jobs"), "count"),
+        "spark.jobs_per_pass": (m("jobs"), "count"),
+        "spark.stages_per_pass": (m("stages"), "count"),
+        "spark.tasks_per_pass": (m("tasks"), "count"),
+        "spark.checkpoints_per_pass": (m("checkpoints"), "count"),
+        "py4j.calls_per_pass": (m("py4j"), "count"),
+        "spark.shuffle_mb_per_pass": (m("shuffle_mb"), "MB"),
+        "spark.busy_share": (m("busy_share"), "share"),
+    }
+
+
+# -- generator side -------------------------------------------------------------
+
+
+def check(out: Outcome, res: dict, expected: dict) -> None:
+    """Every query's answer against its oracle; decimal outputs fail."""
+    for n, want in expected.items():
+        out.attempted += 1
+        rc, cols, h, dec = res["answers"][n]
+        ok = not dec and (rc, cols, h) == tuple(want)
+        if not ok:
+            out.failed += 1
+        out.check(f"oracle:{n}", ok,
+                  f"spark rows={rc} oracle rows={want[0]}" + (f" decimal={dec}" if dec else ""))
+
+
+def metrics(out: Outcome, res: dict, cat: dict) -> None:
+    out.attempted += len(cat["queries"]) * (cat["warmup_passes"] - 1 + cat["passes"])
+    q_ms = {n: median(v) for n, v in res["query_ms"].items()}
+    out.metric("pass_s", median(res["walls"]), "s")
+    out.metric("query_geomean_ms", geomean(q_ms.values()), "ms")
+    out.details["catalog"] = {
+        "queries": cat["queries"], "scale": cat["scale"], "passes": cat["passes"],
+        "warmup_passes": cat["warmup_passes"], "warmup_s": res["warmup_s"],
+        "window_s": res["window_s"], "pass_s_samples": res["walls"],
+        "query_median_ms": q_ms,
+    }
+    out.details["pass_s"] = halves(res["walls"])
+    for n, v in res["query_ms"].items():
+        out.details[f"query_ms.{n}"] = halves(v)

@@ -1,23 +1,26 @@
-"""``chat_wire`` workload: the chat module behind ``LeafSocketIOServer``,
+"""The stream part of a run: the chat module behind ``LeafSocketIOServer``,
 driven over websocket + engine.io + msgpack socket.io at fixed rates.
 
-The server runs in its own process (``chat_server``) so the load
-generator never shares the engine driver's interpreter lock.  The
-generator is one thread that ``select``s over four connections:
+The server runs in the engine process (``engine``), so the load generator
+never shares the engine driver's interpreter lock.  The generator is one
+thread that ``select``s over three connections to the workload's one
+stream (``small`` starts empty and stays under the mirror caps; ``large``
+is preloaded past the 16,384-row append-mirror cap, so its queries take
+the Spark path):
 
-- two writers, each sending 10-event ``stream/event_batch`` calls to its
-  stream (``small`` starts empty and stays under the mirror caps;
-  ``large`` is preloaded past the 16,384-row append-mirror cap); a seeded
-  share of the warm-up batches carries an event without ``content``,
-  which the authorizer must reject;
-- one reader cycling ``messages``, ``message_stats`` and ``my_unread`` on
-  both streams, with ``stream/state_event_batch`` read markers;
-- one subscriber holding a ``messages`` subscription per stream.
+- a writer sending 10-event ``stream/event_batch`` calls; a seeded share
+  of the warm-up batches carries an event without ``content``, which the
+  authorizer must reject;
+- a reader fetching the latest ``messages`` page, and in the warm-up also
+  ``message_stats``, ``my_unread`` and ``stream/state_event_batch`` read
+  markers;
+- a subscriber holding one ``messages`` subscription.
 
-Open loop: every call has a scheduled send time and is timed from it.
-Set-up is the server's start (session, module upload, stream creation,
-preload), the connections, a closed-loop warm-up of fixed count and
-``WARMUP_FRAMES`` untimed frames of the window's schedule.
+Open loop: every window call has a scheduled send time and is timed from
+it.  The stream part's set-up is the stream's preparation in the engine
+process (module upload, stream creation, preload), the connections, a
+closed-loop warm-up of fixed count and ``WARMUP_FRAMES`` untimed frames of
+the window's schedule.
 """
 
 from __future__ import annotations
@@ -27,63 +30,53 @@ import random
 import select
 import socket
 import struct
-import subprocess
-import sys
 import time
 
 from . import modules as M
-from .common import Outcome, latency_stats, median, pct, repo_root
+from .common import Outcome, latency_stats, median, pct
 
-# A frame of FRAME_S seconds holds one commit per stream, four page reads
-# on the small stream and two on the large one, at these offsets.  On a
-# 4-core host a commit plus its subscription push takes ~0.35-0.5 s, a
-# mirror-served page ~5 ms and a Spark-path page ~0.12 s: they follow each
-# other without queueing on a stream lock or on the reader's connection,
-# and the engine is idle for over half the frame, which absorbs a slow
-# call without delaying the next frame.  The small-stream page is cheap
-# but its latency is mostly thread wake-ups, which scatter, so it is
-# sampled four times a frame.
-FRAME_S = 3.0
-OFFSETS = {  # (commit, page reads)
-    "small": (0.0, (0.75, 2.3, 2.5, 2.7)),
-    "large": (1.2, (0.9, 2.0)),
+# A frame of FRAME_S seconds holds one commit and a few page reads, at
+# these offsets.  On a 4-core host a commit plus its subscription push
+# takes ~0.35-0.55 s, a mirror-served page ~5 ms and a Spark-path page
+# ~0.12 s: the reads follow the push without queueing on the stream lock
+# or on the reader's connection, and the engine is idle for about half the
+# frame, which absorbs a slow call without delaying the next frame.  The
+# mirror-served page is cheap but its latency is mostly thread wake-ups,
+# which scatter, so it is sampled four times a frame.
+FRAME_S = 1.5
+OFFSETS = {  # workload -> (commit, page reads)
+    "small": (0.0, (0.6, 0.8, 1.0, 1.2)),
+    "large": (0.0, (0.65, 1.1)),
 }
 BATCH = 10
 MALFORMED_SHARE = 0.1
-PRELOAD = 17_000  # > the engine's 16,384-row append-mirror cap
-# Warm-up, by operation count: WARMUP_COMMITS closed-loop commits per
-# writer (the cold path, the malformed batches and the other reader calls),
-# then WARMUP_FRAMES untimed frames of the window's own schedule.  With
-# only the closed-loop part (eight or sixteen commits), the window's first
-# frame ran 10-45 % above its later ones; two lead frames after 12 or 18
-# commits still left the first half of the window ~10 % above the second
-# in most runs.  The small stream must stay under the engine's 256-event
+# rows preloaded before the run: ``large`` is past the engine's
+# 16,384-row append-mirror cap
+PRELOAD = {"small": 0, "large": 17_000}
+# Warm-up, by operation count: WARMUP_COMMITS closed-loop commits (the
+# cold path, the malformed batches and the other reader calls), then
+# WARMUP_FRAMES untimed frames of the window's own schedule.  With only
+# the closed-loop part, the window's first frame ran 10-45 % above its
+# later ones.  The small stream must stay under the engine's 256-event
 # snapshot cadence through the window, or one commit in the window pays
-# for a full persist: 12 warm-up commits (11 accepted), four lead frames
-# and four window frames add 190 events.
-WARMUP_COMMITS = 12
-WARMUP_FRAMES = 4
-WARMUP_READS = 4  # read slots per stream
+# for a full persist: 8 warm-up commits (7 accepted), two lead frames
+# and six window frames add 150 events.
+WARMUP_COMMITS = 8
+WARMUP_FRAMES = 2
+WARMUP_READS = 4  # read slots
 DRAIN_TIMEOUT_S = 60.0
 PAGE = 50  # rows per messages page
-STREAMS = {"small": "did:plc:chat-small", "large": "did:plc:chat-large"}
-TOKENS = {
-    "tok-writer-small": "did:plc:writer-small",
-    "tok-writer-large": "did:plc:writer-large",
-    "tok-reader": "did:plc:reader",
-}
+STREAM = "did:plc:chat"
+TOKENS = {"tok-writer": "did:plc:writer", "tok-reader": "did:plc:reader"}
 # warm-up read slots send the latest ``messages`` page followed at once by
 # one of the other reader calls, in turn; window read slots send the page
 # only, so the window keeps its headroom
 OTHER_READS = ("message_stats", "my_unread", "marker")
-# server layer figures that are zero by design on this schedule: kept in
-# the run's details, not reported as metrics
-DETAIL_ONLY = ("stream.mirror_hit_ratio.large", "stream.persists_in_window")
-
-E2E = (
-    "setup_s", "commit_small_p50_ms", "commit_large_p50_ms", "query_small_p50_ms",
-    "query_large_p50_ms", "push_small_p50_ms", "push_large_p50_ms", "reopen_s",
-)
+# server layer figures kept in the run's details, not reported as
+# metrics: no persist falls in the window by design, and ``large`` never
+# reaches ``LocalEval.run_readonly`` (its reads bypass the mirror), so its
+# read-only time would be a constant zero
+DETAIL_ONLY = ("stream.persists_in_window", "localexec.readonly_ms", "localexec.readonly_calls")
 
 # socket.io packet types
 CONNECT, EVENT, ACK = 0, 2, 3
@@ -162,11 +155,11 @@ class WireConn:
 
 
 class Call:
-    __slots__ = ("conn", "kind", "stream", "endpoint", "args", "due", "sent", "acked",
+    __slots__ = ("conn", "kind", "endpoint", "args", "due", "sent", "acked",
                  "result", "expect_ok", "meta", "bench_id")
 
-    def __init__(self, conn, kind, stream, endpoint, args, due, expect_ok=True, meta=None):
-        self.conn, self.kind, self.stream = conn, kind, stream
+    def __init__(self, conn, kind, endpoint, args, due, expect_ok=True, meta=None):
+        self.conn, self.kind = conn, kind
         self.endpoint, self.args, self.due = endpoint, args, due
         self.expect_ok, self.meta = expect_ok, meta or {}
         self.sent = self.acked = None
@@ -177,7 +170,7 @@ class Call:
 # -- schedule -----------------------------------------------------------------
 
 
-def _batch(rng: random.Random, stream: str, k: int, malformed: bool, at: int):
+def _batch(rng: random.Random, k: int, malformed: bool, at: int):
     payloads, contents = [], []
     bad = rng.randrange(BATCH) if malformed else -1
     for i in range(BATCH):
@@ -185,62 +178,63 @@ def _batch(rng: random.Random, stream: str, k: int, malformed: bool, at: int):
             payloads.append(M.malformed_payload(at + i))
             contents.append(None)
         else:
-            c = f"{stream}-{k}-{i}-{rng.randrange(10**9)}"
+            c = f"m-{k}-{i}-{rng.randrange(10**9)}"
             payloads.append(M.chat_payload(c, at + i))
             contents.append(c)
     return payloads, contents
 
 
-def build_schedule(rng: random.Random, seconds: float, size: float) -> dict:
+def plan(rng: random.Random, workload: str, seconds: float, size: float) -> dict:
     """Closed-loop warm-up, lead-frame and timed-window calls as (conn,
-    kind, stream, due offset from the window's start, payloads, contents,
-    expect ok); fixed counts for a given ``seconds``.
-    Offsets keep each read between two commits of its stream and keep the
-    reader's small- and large-stream calls from queueing behind each
-    other on its connection."""
-    plan = {"warm": [], "window": []}
-    counter = {"small": 0, "large": 0}
+    kind, due offset from the window's start, payloads, contents, expect
+    ok); fixed counts for a given ``seconds``.  The offsets keep each read
+    between two commits and after the previous commit's push."""
+    calls = {"warm": [], "window": []}
+    counter = 0
     stretch = 1.0 / max(size, 0.25)
 
-    def writes(stream, n, offset, period, phase):
-        # a fixed share of each stream's warm-up batches is malformed, at
-        # seeded positions, so every run rejects the same batches; the
-        # window's batches are all valid, so every one is a latency sample
+    def writes(n, offset, period, phase):
+        # a fixed share of the warm-up batches is malformed, at seeded
+        # positions, so every run rejects the same batches; the window's
+        # batches are all valid, so every one is a latency sample
+        nonlocal counter
         bad_at = set()
         if phase == "warm":
             bad_at = set(rng.sample(range(n), max(1, round(n * MALFORMED_SHARE))))
         for k in range(n):
-            counter[stream] += 1
-            at = 1_700_000_000 + counter[stream] * BATCH
-            payloads, contents = _batch(rng, stream, counter[stream], k in bad_at, at)
-            plan[phase].append(("w_" + stream, "commit", stream, offset + k * period,
-                                payloads, contents, k not in bad_at))
+            counter += 1
+            at = 1_700_000_000 + counter * BATCH
+            payloads, contents = _batch(rng, counter, k in bad_at, at)
+            calls[phase].append(("writer", "commit", offset + k * period,
+                                 payloads, contents, k not in bad_at))
 
-    def reads(stream, n, offsets, period, phase):
+    def reads(n, offsets, period, phase):
         for j in range(n):
             for off in offsets:
                 due = off + j * period
-                plan[phase].append(("reader", "messages", stream, due, None, None, True))
+                calls[phase].append(("reader", "messages", due, None, None, True))
             if phase == "warm":
-                plan[phase].append(("reader", OTHER_READS[j % len(OTHER_READS)], stream,
-                                    due, None, None, True))
+                calls[phase].append(("reader", OTHER_READS[j % len(OTHER_READS)],
+                                     due, None, None, True))
 
-    for s in STREAMS:
-        writes(s, max(2, int(WARMUP_COMMITS * size)), 0.0, 0.0, "warm")
-        reads(s, max(2, int(WARMUP_READS * size)), (0.0,), 0.0, "warm")
+    writes(max(2, int(WARMUP_COMMITS * size)), 0.0, 0.0, "warm")
+    reads(max(2, int(WARMUP_READS * size)), (0.0,), 0.0, "warm")
     # the lead frames come first, at negative offsets from the window's start
     frame = FRAME_S * stretch
     frames = max(2, int(seconds / frame))
     lead_s = WARMUP_FRAMES * frame
-    for s, (w_off, r_offs) in OFFSETS.items():
-        writes(s, WARMUP_FRAMES + frames, w_off * stretch - lead_s, frame, "window")
-        reads(s, WARMUP_FRAMES + frames, tuple(r * stretch - lead_s for r in r_offs), frame,
-              "window")
-    calls = sorted(plan["window"], key=lambda c: c[3])
-    plan["lead"] = [c for c in calls if c[3] < 0]
-    plan["window"] = [c for c in calls if c[3] >= 0]
-    plan["lead_s"] = lead_s
-    return plan
+    w_off, r_offs = OFFSETS[workload]
+    writes(WARMUP_FRAMES + frames, w_off * stretch - lead_s, frame, "window")
+    reads(WARMUP_FRAMES + frames, tuple(r * stretch - lead_s for r in r_offs), frame, "window")
+    timed = sorted(calls["window"], key=lambda c: c[2])
+    return {
+        "warm": calls["warm"],
+        "lead": [c for c in timed if c[2] < 0],
+        "window": [c for c in timed if c[2] >= 0],
+        "lead_s": lead_s,
+        "frames": frames,
+        "preload": max(200, int(PRELOAD[workload] * size)) if PRELOAD[workload] else 0,
+    }
 
 
 # -- the event loop ---------------------------------------------------------
@@ -250,10 +244,8 @@ class Driver:
     def __init__(self, conns: dict, preload: int, trace: bool):
         self.conns = conns
         self.by_sock = {c.sock: c for c in conns.values()}
-        self.sub_stream: dict[str, str] = {}  # subscription id -> stream
-        self.pushes = {"small": [], "large": []}  # (t, [[idx, content], ...])
-        # highest idx acknowledged per stream
-        self.latest = {"small": 0, "large": preload}
+        self.pushes = []  # (t, [[idx, content], ...] or None for an error)
+        self.latest = preload  # highest idx acknowledged
         self.trace = trace
         self.seq = 0
 
@@ -265,14 +257,13 @@ class Driver:
             args["benchId"] = call.bench_id
         if call.kind == "marker":
             # mark everything acknowledged so far as read
-            last = self.latest[call.stream]
-            call.meta["last_read"] = last
-            args["payloads"] = [M.marker_payload(last)]
+            call.meta["last_read"] = self.latest
+            args["payloads"] = [M.marker_payload(self.latest)]
         if call.kind in ("messages", "message_stats", "my_unread"):
-            call.meta["latest_at_send"] = self.latest[call.stream]
+            call.meta["latest_at_send"] = self.latest
         if call.kind == "messages":
             # the latest page, as a chat client would fetch it
-            start = max(1, self.latest[call.stream] - PAGE + 1)
+            start = max(1, self.latest - PAGE + 1)
             call.meta["start"] = start
             args["query"] = dict(args["query"], start=start)
         call.sent = now
@@ -302,16 +293,13 @@ class Driver:
                         call.acked = now
                         call.result = drisl.decode(bytes(pkt["data"][0]))
                         if call.kind == "commit" and "Ok" in call.result:
-                            le = call.result["Ok"]["latestEvent"]
-                            self.latest[call.stream] = max(self.latest[call.stream], le)
+                            self.latest = max(self.latest, call.result["Ok"]["latestEvent"])
                 elif t == EVENT:
                     data = pkt.get("data") or []
                     if data and data[0] == "stream/subscription_response":
-                        note = drisl.decode(bytes(data[1]))
-                        stream = self.sub_stream.get(note["subscriptionId"])
-                        resp = note["response"]
+                        resp = drisl.decode(bytes(data[1]))["response"]
                         rows = resp["Ok"]["rows"] if "Ok" in resp else None
-                        self.pushes[stream].append(
+                        self.pushes.append(
                             (now, None if rows is None else
                              [[r["idx"]["value"], r["content"]["value"]] for r in rows]))
 
@@ -343,110 +331,73 @@ class Driver:
             if i < len(calls):
                 self.pump(t0 + calls[i].due - time.perf_counter())
 
-    def drain(self, calls: list, deadline: float, want_push: dict) -> bool:
+    def drain(self, calls: list, deadline: float, want_push: int = 0) -> bool:
         while time.perf_counter() < deadline:
-            if all(c.acked for c in calls) and all(
-                self._pushed_upto(s) >= want_push[s] for s in want_push
-            ):
+            if all(c.acked for c in calls) and self.pushed_upto() >= want_push:
                 return True
             self.pump(0.05)
         return False
 
-    def _pushed_upto(self, stream: str) -> int:
-        best = 0
-        for _, rows in self.pushes[stream]:
-            if rows:
-                best = max(best, rows[-1][0])
-        return best
+    def pushed_upto(self) -> int:
+        return max((rows[-1][0] for _, rows in self.pushes if rows), default=0)
 
 
 # -- run -----------------------------------------------------------------------
 
 
-def run(args, clock, tracer, out: Outcome, work, spark_factory) -> None:
-    rng = random.Random(args.seed)
-    size = args.size
-    preload = max(200, int(PRELOAD * size))
-    with clock.exclude():
-        plan = build_schedule(rng, args.seconds, size)
-
-    cfg = {
-        "work": work.path, "trace": int(bool(args.trace)), "streams": STREAMS,
-        "tokens": TOKENS, "preload": preload, "seed": args.seed, "size": size,
-    }
-    proc = subprocess.Popen(
-        [sys.executable, "-m", "perfbench.chat_server", json.dumps(cfg)],
-        cwd=repo_root(), stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
-    )
-    conns = {}
-    try:
-        ready = proc.stdout.readline().split(maxsplit=2)
-        if not ready or ready[0] != "READY":
-            raise RuntimeError("chat server failed to start")
-        port = int(ready[1])
-        server_setup = json.loads(ready[2])
-        _drive(args, clock, out, plan, port, conns, proc, server_setup, preload)
-    finally:
-        for c in conns.values():
-            c.close()
-        if proc.poll() is None:
-            proc.kill()
-        proc.wait()
-
-
-def _drive(args, clock, out, plan, port, conns, proc, server_setup, preload):
+def drive(args, clock, out: Outcome, chat: dict, port: int, conns: dict, proc,
+          setup: dict) -> None:
+    """Run the stream part against the engine process listening on
+    ``port``: connect, subscribe, warm up, run the window, stop the engine
+    and check what it returns."""
     tok = {v: k for k, v in TOKENS.items()}
-    conns["w_small"] = WireConn("w_small", port, tok["did:plc:writer-small"])
-    conns["w_large"] = WireConn("w_large", port, tok["did:plc:writer-large"])
+    conns["writer"] = WireConn("writer", port, tok["did:plc:writer"])
     conns["reader"] = WireConn("reader", port, tok["did:plc:reader"])
     conns["sub"] = WireConn("sub", port, None)
-    drv = Driver(conns, preload, bool(args.trace))
+    drv = Driver(conns, chat["preload"], bool(args.trace))
     while not all(c.connected for c in conns.values()):
         drv.pump(0.1)
 
     def mk(spec):
-        conn, kind, stream, due, payloads, contents, ok = spec
-        did = STREAMS[stream]
+        conn, kind, due, payloads, contents, ok = spec
         if kind == "commit":
-            return Call(conn, kind, stream, "stream/event_batch",
-                        {"streamDid": did, "payloads": payloads}, due, ok, {"contents": contents})
+            return Call(conn, kind, "stream/event_batch",
+                        {"streamDid": STREAM, "payloads": payloads}, due, ok,
+                        {"contents": contents})
         if kind == "marker":
-            return Call(conn, kind, stream, "stream/state_event_batch",
-                        {"streamDid": did, "payloads": []}, due)
+            return Call(conn, kind, "stream/state_event_batch",
+                        {"streamDid": STREAM, "payloads": []}, due)
         q = {"name": kind, "params": {}, "limit": PAGE}
-        return Call(conn, kind, stream, "stream/query", {"streamDid": did, "query": q}, due)
+        return Call(conn, kind, "stream/query", {"streamDid": STREAM, "query": q}, due)
 
-    # subscriptions first, so every committed event is pushed
-    subs = [Call("sub", "subscribe", s, "stream/subscribe_events",
-                 {"streamDid": STREAMS[s], "query": {"name": "messages", "params": {}, "limit": 1000}},
-                 0.0) for s in STREAMS]
-    drv.run_closed(subs, time.perf_counter() + 60)
-    sub_ids = {}
-    for c in subs:
-        if "Ok" not in c.result:
-            raise RuntimeError(f"subscribe failed: {c.result}")
-        sub_ids[c.stream] = c.result["Ok"]["subscriptionId"]
-    drv.sub_stream = {sid: name for name, sid in sub_ids.items()}
+    # the subscription first, so every committed event is pushed
+    sub = Call("sub", "subscribe", "stream/subscribe_events",
+               {"streamDid": STREAM, "query": {"name": "messages", "params": {}, "limit": 1000}},
+               0.0)
+    drv.run_closed([sub], time.perf_counter() + 60)
+    if "Ok" not in sub.result:
+        raise RuntimeError(f"subscribe failed: {sub.result}")
 
-    warm = [mk(s) for s in plan["warm"]]
+    warm = [mk(s) for s in chat["warm"]]
     t_w = time.perf_counter()
     drv.run_closed(warm, time.perf_counter() + 120)
-    # let the warm-up's last subscription pushes land before the window
-    if not drv.drain(warm, time.perf_counter() + DRAIN_TIMEOUT_S, dict(drv.latest)):
+    # let the warm-up's last subscription push land before the window
+    if not drv.drain(warm, time.perf_counter() + DRAIN_TIMEOUT_S, drv.latest):
         raise TimeoutError("warm-up pushes did not arrive")
-    lead = [mk(s) for s in plan["lead"]]
-    calls = [mk(s) for s in plan["window"]]
-    # the window opens once the lead frames have run
-    setup_s = clock.setup_s() + plan["lead_s"]
-    t0 = time.perf_counter() + plan["lead_s"]
+    setup["marks"].update({"connected": t_w, "lead_start": time.perf_counter()})
+    lead = [mk(s) for s in chat["lead"]]
+    calls = [mk(s) for s in chat["window"]]
+    # the window opens once the lead frames have run; set-up is everything
+    # before it except the catalog part's timed passes
+    setup_s = clock.setup_s() + chat["lead_s"] - setup["catalog"]["window_s"]
+    t0 = time.perf_counter() + chat["lead_s"]
     warmup_s = t0 - t_w
     drv.run_open(lead + calls, t0)
-    window_end = t0 + args.seconds
+    window_end = t0 + chat["frames"] * FRAME_S / max(args.size, 0.25)
     backlog = sum(1 for c in calls if t0 + c.due <= window_end and (c.sent or 1e18) > window_end)
     deadline = time.perf_counter() + DRAIN_TIMEOUT_S
-    drained = drv.drain(lead + calls, deadline, {})
-    # then wait for the pushes that carry the last accepted commit
-    drained = drained and drv.drain(lead + calls, deadline, dict(drv.latest))
+    # wait for every ack, then for the push that carries the last commit
+    drained = drv.drain(lead + calls, deadline) and drv.drain(lead + calls, deadline, drv.latest)
     t1 = time.perf_counter()
     out.check("drained", drained, "acks/pushes outstanding after drain timeout")
 
@@ -454,50 +405,46 @@ def _drive(args, clock, out, plan, port, conns, proc, server_setup, preload):
     proc.stdin.flush()
     line = proc.stdout.readline()
     if not line:
-        raise RuntimeError("chat server exited without a result")
+        raise RuntimeError("engine process exited without a result")
     srv = json.loads(line)
+    marks = setup["marks"]
+    marks.update({"window_open": t0, "drained": t1, "recovered": srv["recovered_at"]})
+    out.details["marks_s"] = {k: v - clock.t0 for k, v in marks.items()}
+    _check(out, args, warm + lead + calls, drv, srv, chat["preload"])
+    _metrics(out, args, calls, drv, t0, setup_s, warmup_s, backlog, srv, setup)
 
-    _check(out, args, warm + lead + calls, drv, srv, preload)
-    _metrics(out, args, calls, drv, t0, setup_s, warmup_s, backlog, srv, server_setup)
 
-
-def _expected(all_calls, preload: int) -> dict:
-    exp = {"small": [], "large": []}
-    exp["large"] = [[i + 1, *M.preload_row(i)[:2]] for i in range(preload)]
+def _expected(all_calls, preload: int) -> list:
+    exp = [[i + 1, *M.preload_row(i)[:2]] for i in range(preload)]
     for c in all_calls:
         if c.kind != "commit" or not c.result or "Ok" not in c.result:
             continue
         last = c.result["Ok"]["latestEvent"]
-        sender = TOKENS[{"w_small": "tok-writer-small", "w_large": "tok-writer-large"}[c.conn]]
         for i, content in enumerate(c.meta["contents"]):
-            exp[c.stream].append([last - BATCH + 1 + i, sender, content])
-    for s in exp:
-        exp[s].sort()
-    return exp
+            exp.append([last - BATCH + 1 + i, TOKENS["tok-writer"], content])
+    return sorted(exp)
 
 
 def _check(out, args, all_calls, drv, srv, preload: int) -> None:
     exp = _expected(all_calls, preload)
     if args.wrong_expectation:
-        exp["small"] = exp["small"][1:]
+        exp = exp[1:]
     for c in all_calls:
         out.attempted += 1
         ok = c.result is not None and (("Ok" in c.result) == c.expect_ok)
         if ok and c.kind in ("messages", "message_stats", "my_unread"):
-            ok = _query_ok(c, exp[c.stream])
+            ok = _query_ok(c, exp)
         if not ok:
             out.failed += 1
-            out.check(f"call:{c.kind}:{c.stream}", False, str(c.result)[:200])
-    for s in STREAMS:
-        live = srv["messages"][s]
-        out.check(f"{s}:messages==accepted", live == exp[s],
-                  f"{len(live)} rows vs {len(exp[s])} accepted")
-        pushed = [row for _, rows in drv.pushes[s] if rows for row in rows]
-        want = [[i, c] for i, _, c in exp[s] if i > (preload if s == "large" else 0)]
-        out.check(f"{s}:pushes exactly once in idx order", pushed == want,
-                  f"{len(pushed)} pushed vs {len(want)} accepted")
-        errs = [1 for _, rows in drv.pushes[s] if rows is None]
-        out.check(f"{s}:no push errors", not errs, f"{len(errs)} error pushes")
+            out.check(f"call:{c.kind}", False, str(c.result)[:200])
+    live = srv["messages"]
+    out.check("messages==accepted", live == exp, f"{len(live)} rows vs {len(exp)} accepted")
+    pushed = [row for _, rows in drv.pushes if rows for row in rows]
+    want = [[i, c] for i, _, c in exp if i > preload]
+    out.check("pushes exactly once in idx order", pushed == want,
+              f"{len(pushed)} pushed vs {len(want)} accepted")
+    errs = sum(1 for _, rows in drv.pushes if rows is None)
+    out.check("no push errors", not errs, f"{errs} error pushes")
     for name, ok, detail in srv["checks"]:
         out.check(name, ok, detail)
 
@@ -523,71 +470,61 @@ def _query_ok(c: Call, exp_rows: list) -> bool:
     return True
 
 
-def _metrics(out, args, calls, drv, t0, setup_s, warmup_s, backlog, srv, server_setup) -> None:
+def _metrics(out, args, calls, drv, t0, setup_s, warmup_s, backlog, srv, setup) -> None:
+    def since_due(c, t):
+        return (t - (t0 + c.due)) * 1000.0
+
     commits = [c for c in calls if c.kind == "commit" and c.expect_ok and c.acked]
-    commit_ms = [(c.acked - (t0 + c.due)) * 1000.0 for c in commits]
-    out.metric("setup_s", setup_s, "s")
-    details = {
-        "server": server_setup, "warmup_s": warmup_s, "window_s": args.seconds,
-        "calls": len(calls),
-        # both streams together mix two modes (mirror-cap sized vs past
-        # it): kept as a diagnostic, reported per stream below
-        "commit_ms_both_streams": latency_stats(commit_ms),
-    }
-    for s in STREAMS:
-        # one stream, one mode: the median (of an even count, the mean of
-        # the two middle samples) is steadier than a nearest-rank p50
-        cm = [(c.acked - (t0 + c.due)) * 1000.0 for c in commits if c.stream == s]
-        out.metric(f"commit_{s}_p50_ms", median(cm), "ms")
-        details[f"commit_{s}_ms"] = latency_stats(cm)
-        for kind in ("messages",) + OTHER_READS:
-            q = [(c.acked - (t0 + c.due)) * 1000.0 for c in calls
-                 if c.stream == s and c.kind == kind and c.acked]
-            details[f"{kind}_{s}_ms"] = latency_stats(q)
-            if kind == "messages":
-                out.metric(f"query_{s}_p50_ms", median(q), "ms")
-        push = []
-        for c in commits:
-            if c.stream != s:
-                continue
-            last = c.result["Ok"]["latestEvent"]
-            got = [t for t, rows in drv.pushes[s] if rows and any(r[0] == last for r in rows)]
-            if got:
-                push.append((got[0] - (t0 + c.due)) * 1000.0)
-        out.metric(f"push_{s}_p50_ms", median(push), "ms")
-        details[f"push_{s}_ms"] = latency_stats(push)
+    commit_ms = [since_due(c, c.acked) for c in commits]
+    page_ms = [since_due(c, c.acked) for c in calls if c.kind == "messages" and c.acked]
+    push_ms = []
+    for c in commits:
+        last = c.result["Ok"]["latestEvent"]
+        got = [t for t, rows in drv.pushes if rows and any(r[0] == last for r in rows)]
+        if got:
+            push_ms.append(since_due(c, got[0]))
     rec = srv["recovery"]
-    out.metric("reopen_s", sum(rec[f"reopen_s.{s}"] for s in STREAMS), "s")
-    details["recovery"] = rec
+    # a median of an even count is the mean of the two middle samples.
+    # The page read (~4 ms on the mirror) and the reopen (~0.07 s) are in
+    # the details only: their medians spread 25-33 % across runs of the
+    # same code, wider than any bound, so a regression could not be told
+    # from noise
+    out.metric("setup_s", setup_s, "s")
+    out.metric("commit_p50_ms", median(commit_ms), "ms")
+    out.metric("push_p50_ms", median(push_ms), "ms")
     late = [(c.sent - (t0 + c.due)) * 1000.0 for c in calls if c.sent]
-    details["gen_late_ms"] = latency_stats(late)
-    details["gen_backlog"] = backlog
-    out.details.update(details)
-    if args.trace:
-        for name, (v, unit) in srv["layers"].items():
-            if name in DETAIL_ONLY:
-                out.details[name] = v
-            else:
-                out.metric(name, v, unit)
-        out.metric("stream.replay_s.large", rec["replay_s.large"], "s")
-        out.metric("spark.replay_jobs.large", rec["replay_jobs.large"], "count")
-        for s in STREAMS:
-            out.metric(f"stream.reopen_s.{s}", rec[f"reopen_s.{s}"], "s")
-            out.metric(f"stream.persist_ms.{s}", rec[f"persist_s.{s}"] * 1000.0, "ms")
-            out.metric(f"stream.snapshot_mb.{s}", rec[f"snapshot_mb.{s}"], "MB")
-        out.metric("stream.log_files.large", rec["log_files.large"], "count")
-        handles = srv.get("handles", {})
-        transport, self_ms = [], []
-        for c in calls:
-            h = handles.get(c.bench_id)
-            if h is None or c.acked is None:
-                continue
-            self_ms.append(h[1])
-            if c.kind == "messages" and c.stream == "small":
-                transport.append((c.acked - c.sent) * 1000.0 - h[0])
-        out.metric("socketio.transport_ms", median(transport), "ms")
-        out.metric("server.handle_self_ms", median(self_ms), "ms")
-        out.metric("gen.late_p99_ms", pct(late, 99), "ms")
-        out.metric("session.start_s", server_setup["session_start_s"], "s")
-        out.metric("session.warmup_s", warmup_s, "s")
-        out.details["dropped_metrics_server"] = srv.get("dropped", {})
+    out.details.update({
+        "engine": {k: v for k, v in setup.items() if k != "catalog"},
+        "stream_warmup_s": warmup_s, "frames": len(commits), "calls": len(calls),
+        "commit_ms": latency_stats(commit_ms), "page_ms": latency_stats(page_ms),
+        "push_ms": latency_stats(push_ms), "recovery": rec,
+        "gen_late_ms": latency_stats(late), "gen_backlog": backlog,
+    })
+    if not args.trace:
+        return
+    for name, (v, unit) in srv["layers"].items():
+        if name in DETAIL_ONLY:
+            out.details[name] = v
+        else:
+            out.metric(name, v, unit)
+    out.metric("stream.replay_s", rec["replay_s"], "s")
+    out.metric("spark.replay_jobs", rec["replay_jobs"], "count")
+    out.metric("stream.reopen_s", rec["reopen_s"], "s")
+    out.metric("stream.persist_ms", rec["persist_s"] * 1000.0, "ms")
+    out.metric("stream.snapshot_mb", rec["snapshot_mb"], "MB")
+    out.metric("stream.log_files", rec["log_files"], "count")
+    handles = srv.get("handles", {})
+    transport, self_ms = [], []
+    for c in calls:
+        h = handles.get(c.bench_id)
+        if h is None or c.acked is None:
+            continue
+        self_ms.append(h[1])
+        if c.kind == "messages":
+            transport.append((c.acked - c.sent) * 1000.0 - h[0])
+    out.metric("socketio.transport_ms", median(transport), "ms")
+    out.metric("server.handle_self_ms", median(self_ms), "ms")
+    out.metric("gen.late_p99_ms", pct(late, 99), "ms")
+    out.metric("session.start_s", setup["session_start_s"], "s")
+    out.metric("session.warmup_s", setup["catalog"]["warmup_s"] + warmup_s, "s")
+    out.details["dropped_metrics"] = srv.get("dropped", {})

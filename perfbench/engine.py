@@ -1,23 +1,25 @@
-"""Server process of the ``chat_wire`` workload.
+"""The engine process of a run.
 
-    python3 -m perfbench.chat_server '<json config>'
+    python3 -m perfbench.engine '<json config>'
 
-Starts the engine (``get_spark``), a ``StreamCatalog`` on a fresh root, a
-``LeafServer`` and a ``LeafSocketIOServer`` on a free localhost port;
-uploads the chat module, creates the ``small`` and ``large`` streams and
-preloads ``large`` through ``Stream.add_events``.  It then prints
-``READY <port> <json>`` and serves until it reads ``STOP <t0> <t1>`` on
-stdin (the generator's window, in ``time.perf_counter`` seconds, which is
-CLOCK_MONOTONIC and so comparable across processes on one host).
+Starts the engine (``get_spark``) and runs the catalog part on it
+(``catalog.run_passes``: warm-up passes, then the timed passes).  Then it
+starts a ``StreamCatalog`` on a fresh root, a ``LeafServer`` and a
+``LeafSocketIOServer`` on a free localhost port, uploads the chat module,
+creates the workload's stream and, for ``large``, preloads it through
+``Stream.add_events``.  It prints ``READY <port> <json>`` (the set-up
+timings and the catalog part's figures and answers) and serves until it
+reads ``STOP <t0> <t1>`` on stdin (the generator's window, in
+``time.perf_counter`` seconds, which is CLOCK_MONOTONIC and so comparable
+across processes on one host).
 
-On stop it times and checks recovery — per stream, ``persist_state``,
-reopens from the snapshot and, in a traced run, a reopen with the
-snapshot removed (full replay), each of which must reproduce the live
-``messages`` — and prints
-one JSON line: every stream's live ``messages`` as ``[idx, sender,
+On stop it times and checks recovery — ``persist_state``, reopens from
+the snapshot and, in a traced run, a reopen with the snapshot removed
+(full replay), each of which must reproduce the live ``messages`` — and
+prints one JSON line: the stream's live ``messages`` as ``[idx, sender,
 content]``, the recovery checks and timings and, in a traced run, the
-server-side layer metrics.  A traced run then also folds a few seeded
-batches through each fold tier (``_fold_tiers``) on the warm session.
+server-side layer metrics.  A traced run also folds a few seeded batches
+through each fold tier (``_fold_tiers``) on the warm session.
 """
 
 from __future__ import annotations
@@ -30,11 +32,11 @@ import time
 
 
 def main() -> int:
+    marks = {"engine_start": time.perf_counter()}
     cfg = json.loads(sys.argv[1])
     real_stdout = sys.stdout
     sys.stdout = sys.stderr  # engine and Spark chatter stays off the pipe
 
-    from perfbench import modules as M
     from perfbench.common import stop_spark
     from perfbench.tracing import Tracer
 
@@ -44,10 +46,25 @@ def main() -> int:
     from leaf_spark.session import get_spark
 
     with tracer.span("session.start"):
-        spark = get_spark("perfbench-chat-server")
+        spark = get_spark(f"perfbench-{cfg['workload']}")
     start_s = time.perf_counter() - t
     spark.sparkContext.setLogLevel("ERROR")
     tracer.attach_spark(spark)
+
+    try:
+        return _serve(cfg, spark, tracer, start_s, marks, real_stdout)
+    finally:
+        tracer.unpatch()
+        stop_spark()
+
+
+def _serve(cfg: dict, spark, tracer, start_s: float, marks: dict, real_stdout) -> int:
+    from perfbench import catalog as C
+    from perfbench import modules as M
+
+    marks["session_started"] = time.perf_counter()
+    cat = C.run_passes(spark, tracer, cfg["catalog"], cfg["seed"], cfg["data_dir"])
+    marks["catalog_done"] = time.perf_counter()
 
     from leaf_spark.catalog import StreamCatalog
     from leaf_spark.server import Connection, LeafServer
@@ -57,21 +74,22 @@ def main() -> int:
     catalog = StreamCatalog(spark, os.path.join(cfg["work"], "streams"))
     server = LeafServer(catalog)
     cid = catalog.modules.upload(M.CHAT)
-    dids = cfg["streams"]
-    for did in dids.values():
-        catalog.create_stream(did, cid)
+    did = cfg["stream"]
+    catalog.create_stream(did, cid)
 
-    # preload ``large`` past the append-mirror cap, in one batch
+    # ``large``: preload past the append-mirror cap, in one batch
     t = time.perf_counter()
-    catalog.open(dids["large"]).add_events(
-        [M.chat_event(*M.preload_row(i)) for i in range(cfg["preload"])])
+    if cfg["preload"]:
+        catalog.open(did).add_events(
+            [M.chat_event(*M.preload_row(i)) for i in range(cfg["preload"])])
     preload_s = time.perf_counter() - t
 
     tokens = {tok: Connection(user=user) for tok, user in cfg["tokens"].items()}
     sio = LeafSocketIOServer(server, port=0, tokens=tokens).start()
     print(
         "READY", sio.port,
-        json.dumps({"session_start_s": start_s, "preload_s": preload_s}),
+        json.dumps({"session_start_s": start_s, "preload_s": preload_s, "catalog": cat,
+                    "marks": {**marks, "serving": time.perf_counter()}}),
         file=real_stdout, flush=True,
     )
 
@@ -81,20 +99,20 @@ def main() -> int:
         return 1
     t0, t1 = float(line[1]), float(line[2])
     sio.close()
-    result = {"messages": {}, "checks": [], "layers": {}}
-    for name, did in dids.items():
-        result["messages"][name] = _messages(catalog.open(did))
+    result = {"messages": _messages(catalog.open(did)), "checks": [], "layers": {}}
     if tracer.enabled:
         tracer.collect_jobs([s for s in tracer.spans if s.t0 >= t0])
-        result["layers"] = _layer_metrics(tracer, dids, t0, t1)
+        result["layers"] = _layer_metrics(tracer, did, t0, t1)
         result["handles"] = _handle_spans(tracer, t0)
         result["dropped"] = tracer.dropped
-    result["recovery"] = _recovery(spark, tracer, catalog, dids, result)
+    result["recovery"] = _recovery(spark, tracer, catalog, did, result)
+    result["recovered_at"] = time.perf_counter()
     if tracer.enabled:
         result["layers"].update(_fold_tiers(spark, tracer, cfg, result))
-    tracer.unpatch()
+        traces = os.path.join(os.path.dirname(cfg["work"]), "traces")
+        os.makedirs(traces, exist_ok=True)
+        tracer.dump(os.path.join(traces, f"{cfg['workload']}-seed{cfg['seed']}.jsonl"))
     print(json.dumps(result), file=real_stdout, flush=True)
-    stop_spark()
     return 0
 
 
@@ -105,59 +123,52 @@ def _messages(stream) -> list:
     return [[r["idx"], r["sender"], r["content"]] for r in rows]
 
 
-# reopen is cheap (~0.08 s a stream): repeat it and report the median; a
-# median of three still spread 15-40 % across runs
+# reopen is cheap (~0.08 s): repeat it and report the median; a median of
+# three still spread 15-40 % across runs
 REOPENS = 9
-# the large stream's log holds the preload and every commit; it is
-# replayed in traced runs only (3-8 s, a per-layer figure); the small
-# one's full replay would add ~4 s of cold-path time to every run
-REPLAYED = ("large",)
 
 
-def _recovery(spark, tracer, catalog, dids: dict, result: dict) -> dict:
-    """Persist every stream and reopen each from its snapshot ``REOPENS``
-    times; in a traced run, remove the snapshot of each stream in
-    ``REPLAYED`` and replay its whole log.  Every reopened and replayed
-    stream must reproduce the live ``messages``."""
+def _recovery(spark, tracer, catalog, did: str, result: dict) -> dict:
+    """Persist the stream and reopen it from its snapshot ``REOPENS``
+    times; in a traced run, remove the snapshot and replay the whole log
+    (a per-layer figure: one replay took 2-8 s and spread too far for an
+    end-to-end bound).  Every reopened and replayed stream must reproduce
+    the live ``messages``."""
     from perfbench.common import median
 
+    live = result["messages"]
     timing = {}
-    for name, did in dids.items():
-        t = time.perf_counter()
-        catalog.open(did).persist_state()
-        timing[f"persist_s.{name}"] = time.perf_counter() - t
+    t = time.perf_counter()
+    catalog.open(did).persist_state()
+    timing["persist_s"] = time.perf_counter() - t
     catalog.close()
-    for name, did in dids.items():
-        live = result["messages"][name]
-        reopen = []
-        for i in range(REOPENS):
-            t = time.perf_counter()
-            with tracer.span(f"stream.reopen.{name}", job_group=True):
-                s = _open(spark, catalog.root, did)
-            reopen.append(time.perf_counter() - t)
-            if i == 0:
-                got = _messages(s)
-                result["checks"].append(
-                    [f"{name}:reopen==live", got == live, f"{len(got)} vs {len(live)} rows"])
-        snap = os.path.join(s.dir, "snapshot")
-        timing[f"snapshot_mb.{name}"] = sum(
-            os.path.getsize(os.path.join(d, f)) for d, _, fs in os.walk(snap) for f in fs) / 1e6
-        timing[f"log_files.{name}"] = sum(
-            1 for f in os.listdir(s.events_dir) if f.endswith(".parquet"))
-        timing[f"reopen_s.{name}"] = median(reopen)
-        if name not in REPLAYED or not tracer.enabled:
-            continue
-        shutil.rmtree(snap, ignore_errors=True)
+    reopen = []
+    for i in range(REOPENS):
         t = time.perf_counter()
-        with tracer.span(f"stream.replay.{name}", job_group=True) as sp:
+        with tracer.span("stream.reopen", job_group=True):
             s = _open(spark, catalog.root, did)
-        timing[f"replay_s.{name}"] = time.perf_counter() - t
-        got = _messages(s)
-        result["checks"].append(
-            [f"{name}:replay==live", got == live, f"{len(got)} vs {len(live)} rows"])
-        if sp is not None:
-            tracer.collect_jobs(tracer.subtree(sp))
-            timing[f"replay_jobs.{name}"] = tracer.inclusive_jobs(sp)[0]
+        reopen.append(time.perf_counter() - t)
+        if i == 0:
+            got = _messages(s)
+            result["checks"].append(
+                ["reopen==live", got == live, f"{len(got)} vs {len(live)} rows"])
+    snap = os.path.join(s.dir, "snapshot")
+    timing["snapshot_mb"] = sum(
+        os.path.getsize(os.path.join(d, f)) for d, _, fs in os.walk(snap) for f in fs) / 1e6
+    timing["log_files"] = sum(1 for f in os.listdir(s.events_dir) if f.endswith(".parquet"))
+    timing["reopen_s"] = median(reopen)
+    timing["reopen_s_samples"] = reopen
+    if not tracer.enabled:
+        return timing
+    shutil.rmtree(snap, ignore_errors=True)
+    t = time.perf_counter()
+    with tracer.span("stream.replay", job_group=True) as sp:
+        s = _open(spark, catalog.root, did)
+    timing["replay_s"] = time.perf_counter() - t
+    got = _messages(s)
+    result["checks"].append(["replay==live", got == live, f"{len(got)} vs {len(live)} rows"])
+    tracer.collect_jobs(tracer.subtree(sp))
+    timing["replay_jobs"] = tracer.inclusive_jobs(sp)[0]
     return timing
 
 
@@ -326,7 +337,7 @@ def _handle_spans(tracer, t0: float) -> dict:
     return out
 
 
-def _layer_metrics(tracer, dids: dict, t0: float, t1: float) -> dict:
+def _layer_metrics(tracer, did: str, t0: float, t1: float) -> dict:
     from perfbench.common import median, pct
 
     m = {}
@@ -368,18 +379,18 @@ def _layer_metrics(tracer, dids: dict, t0: float, t1: float) -> dict:
     persists = tracer.by_name("stream.persist", since=t0, until=t1)
     m["stream.persists_in_window"] = (len(persists), "count")
 
-    queries = tracer.by_name("stream.query", since=t0, until=t1)
-    for name in ("small", "large"):
-        did = dids[name]
-        req = [s for s in queries if s.attrs["did"] == did and "_serve_conn" in s.thread]
-        sub = [s for s in queries if s.attrs["did"] == did and "_serve_conn" not in s.thread]
-        hits = [s for s in req if not any(c.name == "stream.query_df" for c in tracer.subtree(s))]
-        m[f"stream.query_ms.{name}"] = (median(s.ms for s in req), "ms")
-        m[f"stream.query_calls.{name}"] = (len(req), "count")
-        m[f"stream.mirror_hit_ratio.{name}"] = (len(hits) / len(req) if req else 0.0, "share")
-        m[f"subscribe.requery_ms.{name}"] = (median(s.ms for s in sub), "ms")
+    queries = [s for s in tracer.by_name("stream.query", since=t0, until=t1)
+               if s.attrs["did"] == did]
+    req = [s for s in queries if "_serve_conn" in s.thread]
+    sub = [s for s in queries if "_serve_conn" not in s.thread]
+    hits = [s for s in req if not any(c.name == "stream.query_df" for c in tracer.subtree(s))]
+    m["stream.query_ms"] = (median(s.ms for s in req), "ms")
+    m["stream.query_calls"] = (len(req), "count")
+    m["stream.mirror_hit_ratio"] = (len(hits) / len(req) if req else 0.0, "share")
+    m["subscribe.requery_ms"] = (median(s.ms for s in sub), "ms")
     ro = tracer.by_name("localexec.readonly", since=t0, until=t1)
     m["localexec.readonly_ms"] = (median(s.ms for s in ro) if ro else 0.0, "ms")
+    m["localexec.readonly_calls"] = (len(ro), "count")
     return m
 
 

@@ -2,7 +2,7 @@
 one traced run.
 
     python3 perfbench/evidence.py --out perfbench/evidence/NAME.json
-        [--workloads catalog,chat_wire]
+        [--workloads small,large]
 
 Run from the checkout root.  For every workload it runs ``run.py`` once per
 seed of each set in ``SETS`` (plain), then once traced with

@@ -1,16 +1,24 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload {catalog,chat_wire}
+    python3 perfbench/run.py --workload {small,large}
                              --seed N --seconds S --trace {0,1}
 
-Run from the root of a checkout.  Inputs come from ``--seed``; the timed
-window's operation counts come from ``--seconds``.  ``--trace 0`` prints the
-workload's end-to-end metrics, ``--trace 1`` its per-layer metrics (from a
-separate, traced run).  The last line of standard output is one JSON object
-``{"correct", "attempted", "failed", "metrics"}``; the line before it is a
-``{"details": ...}`` object with the steadiness diagnostics.  A failed
-output check exits 1 after printing the result; a checkout without the
-engine exits 2 without printing one.
+Run from the root of a checkout.  Every run has the same two parts, on
+one engine process: the catalog part (catalog queries, closed loop,
+``catalog``) and then the stream part (the chat module served over
+socket.io at fixed rates, ``chat_wire``).  The workload picks their
+inputs: ``small`` runs the sub-second catalog queries and a fresh stream
+served from the append mirror; ``large`` runs the compute-heavy catalog
+queries and a stream preloaded past the mirror cap, served by Spark.
+
+Inputs come from ``--seed``; the timed windows' operation counts come from
+``--seconds`` (``CATALOG_SHARE`` of it for the catalog part, the rest for
+the stream part).  ``--trace 0`` prints the end-to-end metrics, ``--trace
+1`` the per-layer metrics (from a separate, traced run).  The last line
+of standard output is one JSON object ``{"correct", "attempted", "failed",
+"metrics"}``; the line before it is a ``{"details": ...}`` object with the
+steadiness diagnostics.  A failed output check exits 1 after printing the
+result; a checkout without the engine exits 2 without printing one.
 """
 
 from __future__ import annotations
@@ -26,7 +34,9 @@ import math  # noqa: E402
 import os  # noqa: E402
 import sys  # noqa: E402
 
-WORKLOADS = ("catalog", "chat_wire")
+WORKLOADS = ("small", "large")
+CATALOG_SHARE = 0.4  # of --seconds; the stream part's window is the rest
+E2E = ("setup_s", "pass_s", "query_geomean_ms", "commit_p50_ms", "push_p50_ms")
 
 
 def parse_args(argv=None):
@@ -76,7 +86,7 @@ def main(argv=None) -> int:
     root = os.getcwd()
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, here)
-    from perfbench.common import Clock, HostSampler, Outcome, WorkDir, engine_present, stop_spark
+    from perfbench.common import Clock, HostSampler, Outcome, WorkDir, engine_present
 
     if not engine_present(root):
         print(f"perfbench: no leaf_spark package under {root}; run from a checkout root",
@@ -90,34 +100,19 @@ def main(argv=None) -> int:
     real_stdout = sys.stdout
     out = Outcome()
     clock = Clock(_T0)
-    from perfbench.tracing import Tracer
-
-    tracer = Tracer(bool(args.trace))
     try:
         with contextlib.redirect_stdout(sys.stderr):
-            if args.workload == "catalog":
-                from perfbench import catalog as wl
-            else:
-                from perfbench import chat_wire as wl
-            tracer.install_substrate()
-            wl.run(args, clock, tracer, out, work, _spark_factory(tracer, out, args))
+            _run(args, clock, out, work)
             host_info = host.summary()
-            if tracer.enabled:
-                out.metric("host.steal_share", host_info["steal_share"], "share")
-                out.metric("host.load1", host_info["load1_before"], "load")
-                out.details["dropped_metrics"] = tracer.dropped
-                trace_dir = os.path.join(work.base, "traces")
-                os.makedirs(trace_dir, exist_ok=True)
-                tracer.dump(os.path.join(trace_dir, f"{args.workload}-seed{args.seed}.jsonl"))
-            tracer.unpatch()
-            stop_spark()
     finally:
         work.close()
 
     if args.trace:
+        out.metric("host.steal_share", host_info["steal_share"], "share")
+        out.metric("host.load1", host_info["load1_before"], "load")
         # a traced run reports per-layer metrics; its end-to-end figures
         # go to the details, where they give the tracing overhead
-        out.details["e2e_traced"] = {k: out.metrics.pop(k)[0] for k in wl.E2E if k in out.metrics}
+        out.details["e2e_traced"] = {k: out.metrics.pop(k)[0] for k in E2E if k in out.metrics}
     out.details["host"] = host_info
     out.details["checks_failed"] = [(n, d) for n, ok, d in out.checks if not ok]
     out.details["checks_run"] = len(out.checks)
@@ -132,22 +127,60 @@ def main(argv=None) -> int:
     return 0 if out.correct else 1
 
 
-def _spark_factory(tracer, out, args):
-    def make():
-        from leaf_spark.session import get_spark
+def _run(args, clock, out, work) -> None:
+    """Prepare both parts' inputs, start the engine process, check the
+    catalog part it ran, drive the stream part, and always stop the
+    engine process and wait for it."""
+    import random
+    import subprocess
 
-        t = time.perf_counter()
-        with tracer.span("session.start"):
-            spark = get_spark(f"perfbench-{args.workload}")
-        start_s = time.perf_counter() - t
-        spark.sparkContext.setLogLevel("ERROR")
-        tracer.attach_spark(spark)
-        out.details["session_start_s"] = start_s
-        if tracer.enabled:
-            out.metric("session.start_s", start_s, "s")
-        return spark
+    from perfbench import catalog, chat_wire
+    from perfbench.common import repo_root
 
-    return make
+    cat = catalog.plan(args.workload, args.seconds * CATALOG_SHARE, args.size)
+    # benchmark-side preparation: tables, oracle answers and the stream
+    # part's schedule (not set-up)
+    with clock.exclude():
+        data_dir = work.sub("tables")
+        prep = catalog.prepare(args.seed, cat, data_dir, args.wrong_expectation)
+        chat = chat_wire.plan(random.Random(args.seed), args.workload,
+                              args.seconds * (1 - CATALOG_SHARE), args.size)
+    out.details["tables"] = prep["tables"]
+    cfg = {
+        "workload": args.workload, "seed": args.seed, "size": args.size,
+        "trace": int(bool(args.trace)), "work": work.path, "data_dir": data_dir,
+        "catalog": cat, "stream": chat_wire.STREAM, "tokens": chat_wire.TOKENS,
+        "preload": chat["preload"],
+    }
+    proc = subprocess.Popen(
+        [sys.executable, "-m", "perfbench.engine", json.dumps(cfg)],
+        cwd=repo_root(), stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True,
+    )
+    conns = {}
+    try:
+        ready = proc.stdout.readline().split(maxsplit=2)
+        if not ready or ready[0] != "READY":
+            raise RuntimeError("engine process failed to start")
+        setup = json.loads(ready[2])
+        catalog.check(out, setup["catalog"], prep["expected"])
+        catalog.metrics(out, setup["catalog"], cat)
+        if args.trace:
+            for name, (v, unit) in setup["catalog"]["layers"].items():
+                out.metric(name, v, unit)
+        chat_wire.drive(args, clock, out, chat, int(ready[1]), conns, proc, setup)
+        proc.wait(timeout=60)
+    finally:
+        for c in conns.values():
+            c.close()
+        if proc.poll() is None:
+            # end of stdin tells the engine process to stop its JVM and exit
+            with contextlib.suppress(OSError):
+                proc.stdin.close()
+            try:
+                proc.wait(timeout=30)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+        proc.wait()
 
 
 if __name__ == "__main__":
